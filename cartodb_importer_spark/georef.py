@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 # importer.rb:299-300 — candidate column names, lowercase, first match wins.
 LATITUDE_CANDIDATES = ["latitude", "lat", "latitudedecimal", "latitud", "lati"]
@@ -34,14 +35,27 @@ def find_latlon_columns(columns: list[str]) -> tuple[str | None, str | None]:
     return lat, lon
 
 
-def point_wkt(lon: Column, lat: Column) -> Column:
-    """O13: WKT POINT guarded by the reference's range regexes — rows whose
-    textual lon/lat fail validation get NULL geometry, exactly like the
-    guarded UPDATE's WHERE clause."""
-    lon_s = lon.cast("string")
-    lat_s = lat.cast("string")
+def _coord_ok(df: DataFrame, col: str, bound: int, rx: str) -> Column:
+    """Range guard of one coordinate column. The reference's regexes were
+    written for plain decimal text, but Spark's string cast writes 0.0005
+    as 5.0E-4 and 90 as 90.0, so a numeric column gets the range the
+    regexes express, -bound <= col <= bound. NaN fails it: Spark orders
+    NaN above every number. Any other column keeps the verbatim regex on
+    its text."""
+    if isinstance(df.schema[col].dataType, NumericType):
+        return F.col(col).between(-bound, bound)
+    return F.col(col).cast("string").rlike(rx)
+
+
+def point_wkt(df: DataFrame, lon: str, lat: str) -> Column:
+    """O13: WKT POINT from df's ``lon``/``lat`` columns, guarded like the
+    reference's UPDATE — rows whose lon/lat fail validation get NULL
+    geometry, exactly like its WHERE clause. The WKT carries Spark's
+    string cast of each coordinate."""
+    lon_s = F.col(lon).cast("string")
+    lat_s = F.col(lat).cast("string")
     return F.when(
-        lon_s.rlike(LON_RX) & lat_s.rlike(LAT_RX),
+        _coord_ok(df, lon, 180, LON_RX) & _coord_ok(df, lat, 90, LAT_RX),
         F.concat(F.lit("POINT("), lon_s, F.lit(" "), lat_s, F.lit(")")),
     )
 
@@ -55,7 +69,7 @@ def georeference_points(df: DataFrame) -> DataFrame:
     lat, lon = find_latlon_columns(df.columns)
     if lat is None or lon is None:
         return df
-    return df.withColumn("the_geom", point_wkt(F.col(lon), F.col(lat)))
+    return df.withColumn("the_geom", point_wkt(df, lon, lat))
 
 
 def geojson_point_to_wkt(geom: Column) -> Column:

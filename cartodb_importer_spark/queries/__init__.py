@@ -19,9 +19,14 @@ weaker rows-only check for those.
 
 from __future__ import annotations
 
+import glob
+import os
+import stat
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -78,11 +83,6 @@ class Tables:
         return self._cache[name]
 
 
-#: path -> frozenset of TIMESTAMP(NANOS) column names (footer sniff cache;
-#: the same files are read by every query in a sweep)
-_NS_COLS_CACHE: dict[str, frozenset[str]] = {}
-
-
 def _utc_epoch_ns(ts) -> int:
     """ISO-8601 string (naive = UTC) or datetime -> integer epoch nanos.
     Integer arithmetic throughout: above 2^53 ns (~mid-1970) a float
@@ -130,14 +130,17 @@ def read_parquet_ts_range(
     plan differs."""
     from pyspark.sql import functions as F
 
-    ns_cols = _nanos_cols(path)
+    df, schema, ns_cols = _read_parquet_raw(spark, path)
     if ts_col in ns_cols:
-        lo_ns = None if lo is None else _utc_epoch_ns(lo)
-        hi_ns = None if hi is None else _utc_epoch_ns(hi)
-        return read_parquet_normalized(
-            spark, path, _raw_ns_range=(ts_col, lo_ns, hi_ns)
-        )
-    df = read_parquet_normalized(spark, path)
+        # the bounds go on the RAW long column BEFORE the conversion
+        # expression, so they reach the parquet scan's PushedFilters
+        # (row-group min/max skipping)
+        if lo is not None:
+            df = df.filter(F.col(ts_col) >= F.lit(_utc_epoch_ns(lo)))
+        if hi is not None:
+            df = df.filter(F.col(ts_col) < F.lit(_utc_epoch_ns(hi)))
+        return _normalize(df, schema, ns_cols)
+    df = _normalize(df, schema, ns_cols)
     if lo is not None:
         df = df.filter(F.col(ts_col) >= F.lit(lo).cast("timestamp"))
     if hi is not None:
@@ -145,36 +148,37 @@ def read_parquet_ts_range(
     return df
 
 
+#: SparkSession -> {file path: (stamp, inferred StructType, TIMESTAMP(NANOS)
+#: column names)}; see read_parquet_normalized for when an entry is reused
+_SCHEMA_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+#: SQL confs that change what Spark infers from a parquet footer, besides
+#: the two that _read_parquet_raw pins; their values are part of the stamp
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
 def _nanos_cols(path: str) -> frozenset[str]:
-    """TIMESTAMP(NANOS) column names from one parquet footer (cached —
-    the same files are read by every query in a sweep)."""
-    ns_cols = _NS_COLS_CACHE.get(path)
-    if ns_cols is None:
-        try:
-            import pyarrow.parquet as pq
+    """TIMESTAMP(NANOS) column names from one parquet footer (a
+    directory's first part file)."""
+    try:
+        import pyarrow.parquet as pq
 
-            import glob
-            import os
-
-            sample = path
-            if os.path.isdir(path):
-                sample = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-            ns_cols = frozenset(
-                f.name
-                for f in pq.read_schema(sample)
-                if str(f.type) == "timestamp[ns]"
-            )
-        except Exception:
-            ns_cols = frozenset()
-        _NS_COLS_CACHE[path] = ns_cols
-    return ns_cols
+        sample = path
+        if os.path.isdir(path):
+            sample = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+        return frozenset(
+            f.name
+            for f in pq.read_schema(sample)
+            if str(f.type) == "timestamp[ns]"
+        )
+    except Exception:
+        return frozenset()
 
 
-def read_parquet_normalized(
-    spark: SparkSession,
-    path: str,
-    _raw_ns_range: tuple[str, int | None, int | None] | None = None,
-) -> DataFrame:
+def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
     """Read parquet with deterministic timestamp semantics on ANY session.
 
     Two parquet physical encodings of a timestamp column are normalized to
@@ -191,7 +195,31 @@ def read_parquet_normalized(
 
     Both confs are runtime-settable SQL confs, set here rather than only in
     the session factory so the read works on externally created sessions —
-    e.g. the correctness driver's — not just ``get_spark()``'s."""
+    e.g. the correctness driver's — not just ``get_spark()``'s.
+
+    Schema memo. Reading parquet without a schema makes Spark run one job
+    that merges the file footers. The first read of a parquet *file* in a
+    session runs it and records the inferred schema together with the
+    file's TIMESTAMP(NANOS) columns (a pyarrow footer read); later reads
+    of that file in the same session pass the recorded schema to
+    ``spark.read.schema(...)`` and run no job. The plan and the results
+    are the same either way. A recorded schema is reused only while the
+    file's inode, size and mtime (ns) and the session's
+    ``binaryAsString``/``int96AsTimestamp`` confs are unchanged; any
+    difference re-infers and replaces the entry. The memo belongs to the
+    ``SparkSession`` object (a weak key), so ``newSession()`` or a session
+    rebuilt after ``stop()`` starts empty. Directory datasets are never
+    memoized: writers add and compact their part files, so each read
+    infers afresh."""
+    return _normalize(*_read_parquet_raw(spark, path))
+
+
+def _read_parquet_raw(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, StructType, frozenset[str]]:
+    """``spark.read.parquet(path)`` under the normalizing confs, with a
+    file's inferred schema memoized per session. Returns the raw frame,
+    its schema and its TIMESTAMP(NANOS) column names."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -207,24 +235,40 @@ def read_parquet_normalized(
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        df = spark.read.parquet(path)
+        return df, df.schema, _nanos_cols(path)
+    stamp = (
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        *(spark.conf.get(c) for c in _INFER_CONFS),
+    )
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == stamp:
+        _, schema, ns_cols = hit
+        return spark.read.schema(schema).parquet(path), schema, ns_cols
     df = spark.read.parquet(path)
     ns_cols = _nanos_cols(path)
-    from pyspark.sql import functions as F
+    memo[path] = (stamp, df.schema, ns_cols)
+    return df, df.schema, ns_cols
 
-    if _raw_ns_range is not None:
-        # read_parquet_ts_range's nanos path: the bounds go on the RAW
-        # long column BEFORE the conversion expression, so they reach
-        # the parquet scan's PushedFilters (row-group min/max skipping)
-        rc, lo_ns, hi_ns = _raw_ns_range
-        if lo_ns is not None:
-            df = df.filter(F.col(rc) >= F.lit(lo_ns))
-        if hi_ns is not None:
-            df = df.filter(F.col(rc) < F.lit(hi_ns))
+
+def _normalize(
+    df: DataFrame, schema: StructType, ns_cols: frozenset[str]
+) -> DataFrame:
+    """Convert a raw parquet frame's NANOS longs and NTZ timestamps to
+    TimestampType; ``schema`` is the raw read's schema."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         ArrayType,
         DataType,
         MapType,
-        StructType,
         TimestampNTZType,
     )
 
@@ -259,14 +303,13 @@ def read_parquet_normalized(
             )
         return None
 
-    casts = {
-        f.name: _swap_ntz(f.dataType) for f in df.schema.fields
-    }
+    # the NANOS columns are longs in the raw schema, so they are not cast
+    casts = {f.name: _swap_ntz(f.dataType) for f in schema.fields}
     if any(dt is not None for dt in casts.values()):
         df = df.select(
             *[
-                F.col(c).cast(casts[c]).alias(c) if casts[c] is not None else F.col(c)
-                for c in df.columns
+                F.col(c).cast(dt).alias(c) if dt is not None else F.col(c)
+                for c, dt in casts.items()
             ]
         )
     return df

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import naming
-from ..georef import LAT_RX, LON_RX, geojson_point_to_wkt, point_wkt
+from ..georef import geojson_point_to_wkt, point_wkt
 from ..infer import FLOAT_RX, INT32_MAX, INT_RX
 from . import Tables, query
 
@@ -93,29 +93,30 @@ def pipeline_type_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_georef_point",
-    oracle=f"""
+    oracle="""
     SELECT l_orderkey, l_linenumber,
-           CASE WHEN regexp_matches(CAST(l_tax AS VARCHAR), '{LON_RX}')
-                 AND regexp_matches(CAST(l_discount AS VARCHAR), '{LAT_RX}')
+           CASE WHEN l_tax BETWEEN -180 AND 180
+                 AND l_discount BETWEEN -90 AND 90
                 THEN 'POINT(' || CAST(l_tax AS VARCHAR) || ' ' || CAST(l_discount AS VARCHAR) || ')'
                 END AS the_geom,
-           CASE WHEN regexp_matches(CAST(l_extendedprice AS VARCHAR), '{LON_RX}')
-                 AND regexp_matches(CAST(l_discount AS VARCHAR), '{LAT_RX}')
+           CASE WHEN l_extendedprice BETWEEN -180 AND 180
+                 AND l_discount BETWEEN -90 AND 90
                 THEN 'POINT(' || CAST(l_extendedprice AS VARCHAR) || ' ' || CAST(l_discount AS VARCHAR) || ')'
                 END AS the_geom_out_of_range
     FROM lineitem
     """,
 )
 def pipeline_georef_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O13 point georeferencing with the reference's verbatim guard
-    regexes: in-range lon/lat build WKT, out-of-range (extendedprice as a
-    fake lon) yields NULL — set-based, one pass."""
-    t = Tables(spark, sf_dir)
-    return t.lineitem.select(
+    """O13 point georeferencing with the reference's range guard (numeric
+    columns: -180 <= lon <= 180, -90 <= lat <= 90): in-range lon/lat build
+    WKT, out-of-range (extendedprice as a fake lon) yields NULL —
+    set-based, one pass."""
+    li = Tables(spark, sf_dir).lineitem
+    return li.select(
         "l_orderkey",
         "l_linenumber",
-        point_wkt(F.col("l_tax"), F.col("l_discount")).alias("the_geom"),
-        point_wkt(F.col("l_extendedprice"), F.col("l_discount")).alias(
+        point_wkt(li, "l_tax", "l_discount").alias("the_geom"),
+        point_wkt(li, "l_extendedprice", "l_discount").alias(
             "the_geom_out_of_range"
         ),
     )

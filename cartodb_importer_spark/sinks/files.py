@@ -24,19 +24,19 @@ from pyspark.sql import DataFrame
 EXPORT_ROW_CAP = 1_000_000
 
 
-def _guard_export_size(df: DataFrame, cap: int | None = None) -> None:
-    """Raise if df exceeds the driver-side export cap. Uses a limit(cap+1)
-    probe, not count(): the probe stops scanning after cap+1 rows, so it
-    stays cheap even when the input is huge."""
-    if cap is None:
-        cap = EXPORT_ROW_CAP
-    probe = df.limit(cap + 1).count()
-    if probe > cap:
+def _collect_capped(df: DataFrame) -> list:
+    """Collect df for a driver-side export, or raise if it has more than
+    EXPORT_ROW_CAP rows. One ``limit(cap + 1)`` collect both fetches the
+    rows and tells whether the cap is exceeded: the scan stops after
+    cap + 1 rows, so it stays cheap even when the input is huge."""
+    rows = df.limit(EXPORT_ROW_CAP + 1).collect()
+    if len(rows) > EXPORT_ROW_CAP:
         raise ValueError(
-            f"export exceeds the driver-side row cap ({cap}); use the "
-            "partitioned directory sinks (write_csv_dir/write_parquet_dir) "
+            f"export exceeds the driver-side row cap ({EXPORT_ROW_CAP}); use "
+            "the partitioned directory sinks (write_csv_dir/write_parquet_dir) "
             "for large tables"
         )
+    return rows
 
 
 def write_csv_dir(df: DataFrame, path: str, header: bool = True) -> None:
@@ -77,7 +77,10 @@ def export_csv_zip(df: DataFrame, name: str, out_dir: str) -> str:
     return zip_path
 
 
-_COORD = r"(-?[\d.eE+]+)\s+(-?[\d.eE+]+)"
+#: one WKT number: optional sign, digits with an optional fraction, and an
+#: optional signed exponent (Python's repr writes 1e-05)
+_WKT_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
+_COORD = rf"({_WKT_NUM})\s+({_WKT_NUM})"
 
 
 def _wkt_to_kml(wkt: str | None) -> str:
@@ -121,9 +124,8 @@ def export_kmz(
     """O29: KMZ whose single entry is always doc.kml (exporter.rb:82).
     Placemark per row; non-geometry columns become ExtendedData."""
     os.makedirs(out_dir, exist_ok=True)
-    _guard_export_size(df)
     attr_cols = [c for c in df.columns if c != geom_col]
-    rows = df.collect()  # export-to-download path: bounded by the guard
+    rows = _collect_capped(df)
     placemarks = []
     for r in rows:
         data = "".join(
@@ -144,9 +146,6 @@ def export_kmz(
     with zipfile.ZipFile(kmz_path, "w", zipfile.ZIP_DEFLATED) as zf:
         zf.writestr("doc.kml", kml)
     return kmz_path
-
-
-_WKT_NUM = r"-?[\d.eE+]+"
 
 
 def _parse_wkt_parts(wkt: str | None):
@@ -226,9 +225,8 @@ def export_shp_zip(
     from ..readers.dbf import write_dbf
 
     os.makedirs(out_dir, exist_ok=True)
-    _guard_export_size(df)
     attr_cols = [c for c in df.columns if c != geom_col]
-    rows = df.collect()
+    rows = _collect_capped(df)
 
     geoms = [
         _parse_wkt_parts(r[geom_col] if geom_col in df.columns else None)

@@ -303,6 +303,48 @@ def test_shp_export_polyline_roundtrip(spark, tmp_path):
     assert rows[2] is None
 
 
+def test_exponent_coordinates_roundtrip(spark, catalog, tmp_path):
+    """KMZ and SHP export of a point whose coordinates Python writes with a
+    signed exponent (the KML/GPX readers emit repr(float), e.g. 1e-05):
+    both exports carry the exact values and re-import to the same point."""
+    from cartodb_importer_spark.readers.shp import read_shp
+    from cartodb_importer_spark.sinks.files import export_kmz, export_shp_zip
+
+    df = spark.createDataFrame(
+        [(1, "tiny", "POINT(1e-05 -2.5E-4)")],
+        "id int, name string, the_geom string",
+    )
+    kmz = export_kmz(df, "tiny", str(tmp_path / "kmz"))
+    with zipfile.ZipFile(kmz) as zf:
+        assert b"<coordinates>1e-05,-2.5E-4</coordinates>" in zf.read("doc.kml")
+    res = Importer(spark, catalog, kmz).run()
+    assert catalog.read(spark, res.name).first()["the_geom"] == (
+        "POINT(1e-05 -0.00025)"
+    )
+
+    shp = export_shp_zip(df, "tiny", str(tmp_path / "shp"))
+    with zipfile.ZipFile(shp) as zf:
+        zf.extractall(tmp_path / "shp_x")
+    back, _ = read_shp(spark, str(tmp_path / "shp_x" / "tiny.shp"))
+    assert back.first()["the_geom"] == "POINT(1e-05 -0.00025)"
+
+
+def test_csv_import_georefs_boundary_coordinates(spark, catalog, tmp_path):
+    """Typed lat/lon columns are range-checked as numbers: a coordinate
+    Spark writes as 5.0E-4 or 90.0 is valid; just past the range is not."""
+    src = _write(
+        tmp_path,
+        "edge.csv",
+        "id,lat,lon\n1,90,0.0005\n2,-90,-180\n3,90.0001,0\n4,0,180.5\n",
+    )
+    Importer(spark, catalog, src).run()
+    geoms = {
+        r["id"]: r["the_geom"] for r in catalog.read(spark, "edge").collect()
+    }
+    assert geoms[1] is not None and geoms[2] is not None
+    assert geoms[3] is None and geoms[4] is None
+
+
 def test_import_fleet_parallel(spark, catalog, tmp_path):
     """Fleet import: N files land in parallel, same-stem files get _n
     suffixes instead of racing, and one bad file fails alone."""

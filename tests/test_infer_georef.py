@@ -3,7 +3,12 @@ regexes, the as-of join, and the raster reader stub."""
 
 from pyspark.sql import functions as F
 
-from cartodb_importer_spark.georef import LAT_RX, LON_RX, find_latlon_columns
+from cartodb_importer_spark.georef import (
+    LAT_RX,
+    LON_RX,
+    find_latlon_columns,
+    point_wkt,
+)
 from cartodb_importer_spark.infer import (
     apply_inferred_types,
     infer_column_types,
@@ -72,6 +77,46 @@ def test_latlon_guard_regexes(spark):
     df2 = spark.createDataFrame([(c,) for c, _ in lat_cases], "v string")
     got2 = [r[0] for r in df2.select(F.col("v").rlike(LAT_RX)).collect()]
     assert got2 == [e for _, e in lat_cases]
+
+
+def test_point_wkt_numeric_range_guard(spark):
+    """Numeric lon/lat are checked against the range the guard regexes
+    express, not against Spark's text of them (5.0E-4, 90.0): boundary
+    and tiny values pass, just past the range and NaN do not."""
+    cases = [
+        (0.0005, 0.0005, "POINT(5.0E-4 5.0E-4)"),
+        (180.0, 90.0, "POINT(180.0 90.0)"),
+        (-180.0, -90.0, "POINT(-180.0 -90.0)"),
+        (-3.7, 40.1, "POINT(-3.7 40.1)"),
+        (0.0, 90.0001, None),
+        (0.0, -90.0001, None),
+        (180.5, 0.0, None),
+        (-180.5, 0.0, None),
+        (float("nan"), 0.0, None),
+        (0.0, float("nan"), None),
+    ]
+    df = spark.createDataFrame([c[:2] for c in cases], "lon double, lat double")
+    got = [r[0] for r in df.select(point_wkt(df, "lon", "lat")).collect()]
+    assert got == [c[2] for c in cases]
+
+
+def test_point_wkt_integral_decimal_and_string_columns(spark):
+    """Integral and decimal columns take the numeric range; string columns
+    keep the reference's verbatim regexes on their text."""
+    from decimal import Decimal
+
+    num = spark.createDataFrame(
+        [(180, Decimal("90.0000")), (181, Decimal("0.0000"))],
+        "lon int, lat decimal(8,4)",
+    )
+    got = [r[0] for r in num.select(point_wkt(num, "lon", "lat")).collect()]
+    assert got == ["POINT(180 90.0000)", None]
+    txt = spark.createDataFrame(
+        [("180", "90"), ("0.0005", "0"), ("90.0", "0"), ("5.0E-4", "0")],
+        "lon string, lat string",
+    )
+    got = [r[0] for r in txt.select(point_wkt(txt, "lon", "lat")).collect()]
+    assert got == ["POINT(180 90)", "POINT(0.0005 0)", "POINT(90.0 0)", None]
 
 
 def test_latlon_candidate_priority():
